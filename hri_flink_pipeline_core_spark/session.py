@@ -6,7 +6,7 @@ so the same code scales to a multi-executor cluster:
 - ``spark.sql.shuffle.partitions`` sized to the DATA SCALE the session
   processes (like the AQE advisory below): local test/bench shuffles are
   kilobytes-to-tens-of-MB, where 8 buckets measured uniformly faster
-  than 32 (round 10 — see get_spark); production keeps a cores-sized
+  than 32 (see mode_defaults); production keeps a cores-sized
   default and AQE coalesces post-shuffle partitions at runtime.
 - AQE on: runtime re-planning (skew-join splitting, broadcast demotion/
   promotion, partition coalescing) is the 100-TB safety net.
@@ -24,6 +24,57 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def mode_defaults(mode: str, cpus: int) -> dict[str, str]:
+    """The session confs whose default depends on ``mode``: each is sized
+    to the data scale the session processes, so ``local`` (test/bench
+    scale) and ``production`` differ. The $SPARK_GRAFT_* overrides in
+    ``get_spark`` still win over these."""
+    if mode not in ("local", "production"):
+        # fail loudly: a typo ("Local", "prod") silently selecting the
+        # 64 MB advisory on a local host is exactly the misconfiguration
+        # this parameter exists to prevent
+        raise ValueError(
+            f"SPARK_GRAFT_MODE/mode must be 'local' or 'production', got {mode!r}"
+        )
+    local = mode == "local"
+    return {
+        # Shuffle bucket count is data-scale-sized, like the advisory:
+        # at local bench scale every exchange is kilobytes to
+        # tens of MB, and the per-bucket cost of the shuffle WRITE path
+        # (one buffer + file segment per reduce bucket per map task)
+        # dominates — 8 buckets beat 32 on a 24-query mixed subset in
+        # same-epoch sweeps (35.6 -> 31.5 s, dedup/LSH family -20-35%,
+        # worst regression <0.1 s; raising the AQE advisory instead, with
+        # 32 buckets kept, recovered almost none of it, so the win is the
+        # write path, not reduce-task count). Production keeps a
+        # cores-sized initial count: at multi-GB shuffle scale, 8 would cap
+        # reduce parallelism (AQE coalesce only MERGES partitions) — the
+        # same scale-dependence as the advisory, derived in BASELINE.md.
+        "spark.sql.shuffle.partitions": "8" if local else str(cpus),
+        # 2 MB matches local sf0.1's kilobyte-to-tens-of-MB shuffles;
+        # production keeps Spark's own 64 MB, because 2 MB against
+        # multi-GB shuffles over-partitions every exchange.
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2m" if local else "64m",
+        # Catalyst constraint propagation is a pure OPTIMIZER-TIME cost:
+        # it infers redundant predicates (IsNotNull on join keys, filter
+        # transitivity) whose runtime BENEFIT is early pruning of data that
+        # only exists at data scale, while its planning cost grows with
+        # PLAN size (aliases x predicates — Spark's own docs flag it as
+        # "expensive for certain kinds of query plans"). This engine's
+        # plans are deep (LSH candidate trees, iterative CC/star rounds,
+        # unrolled literal models) and rebuilt per invocation, so at local
+        # bench scale the inference dominates: a paired 20-key mixed
+        # A/B read 24.4-25.0 s base vs 22.1 s with propagation
+        # off, with NO query slower and results bit-identical (the rule
+        # only ADDS redundant predicates; the full 138-key oracle sweep is
+        # re-verified under the off setting). Production keeps Spark's
+        # default ON: at multi-GB scans an inferred IsNotNull pushed into
+        # a parquet scan prunes real IO — the same overhead-vs-benefit
+        # scale crossover as the AQE advisory above.
+        "spark.sql.constraintPropagation.enabled": "false" if local else "true",
+    }
+
+
 def get_spark(
     app_name: str = "hri-pipeline-core-spark",
     cpus: int | None = None,
@@ -34,59 +85,21 @@ def get_spark(
 
     On a real cluster the ``master`` / memory settings come from
     spark-submit; everything under ``spark.sql.*`` here is
-    cluster-appropriate as-is EXCEPT the AQE advisory partition size,
-    which is sized to the data scale the session processes and
-    therefore derives from ``mode`` (ADVICE r7/r8): ``local`` (the
-    default) uses 2 MB — matched to local sf0.1's kilobyte-to-tens-of-MB
-    shuffles — while ``production`` uses Spark's own 64 MB default,
-    because the 2 MB value against multi-GB shuffles over-partitions
-    every exchange (the scale-dependence is derived in BASELINE.md).
-    ``mode`` falls back to $SPARK_GRAFT_MODE, then "local";
-    $SPARK_GRAFT_ADVISORY_PARTITION still overrides the size directly.
+    cluster-appropriate as-is EXCEPT the confs in ``mode_defaults``,
+    which are sized to the data scale the session processes and
+    therefore derive from ``mode``: ``local`` (the default) or
+    ``production``. ``mode`` falls back to
+    $SPARK_GRAFT_MODE, then "local". $SPARK_GRAFT_SHUFFLE_PARTITIONS,
+    $SPARK_GRAFT_ADVISORY_PARTITION and $SPARK_GRAFT_CONSTRAINT_PROP
+    ("true"/"false") override the mode defaults directly (the sf~1
+    sweeps re-measure under them).
     """
     mode = mode or os.environ.get("SPARK_GRAFT_MODE", "local")
-    if mode not in ("local", "production"):
-        # fail loudly: a typo ("Local", "prod") silently selecting the
-        # 64 MB advisory on a local host is exactly the misconfiguration
-        # this parameter exists to prevent (round-8 review finding)
-        raise ValueError(
-            f"SPARK_GRAFT_MODE/mode must be 'local' or 'production', got {mode!r}"
-        )
-    advisory_default = "2m" if mode == "local" else "64m"
     n = cpus or DEFAULT_CPUS
-    # Shuffle bucket count is data-scale-sized, like the advisory
-    # (round 10): at local bench scale every exchange is kilobytes to
-    # tens of MB, and the per-bucket cost of the shuffle WRITE path
-    # (one buffer + file segment per reduce bucket per map task)
-    # dominates — 8 buckets beat 32 on a 24-query mixed subset in
-    # same-epoch sweeps (35.6 -> 31.5 s, dedup/LSH family -20-35%,
-    # worst regression <0.1 s; raising the AQE advisory instead, with
-    # 32 buckets kept, recovered almost none of it, so the win is the
-    # write path, not reduce-task count). Production keeps a
-    # cores-sized initial count: at multi-GB shuffle scale, 8 would cap
-    # reduce parallelism (AQE coalesce only MERGES partitions) — the
-    # same scale-dependence as the advisory, derived in BASELINE.md.
-    # $SPARK_GRAFT_SHUFFLE_PARTITIONS overrides directly (the sf~1
-    # sweeps re-measure under it).
-    shuffle_default = "8" if mode == "local" else str(n)
-    # Catalyst constraint propagation is a pure OPTIMIZER-TIME cost:
-    # it infers redundant predicates (IsNotNull on join keys, filter
-    # transitivity) whose runtime BENEFIT is early pruning of data that
-    # only exists at data scale, while its planning cost grows with
-    # PLAN size (aliases x predicates — Spark's own docs flag it as
-    # "expensive for certain kinds of query plans"). This engine's
-    # plans are deep (LSH candidate trees, iterative CC/star rounds,
-    # unrolled literal models) and rebuilt per invocation, so at local
-    # bench scale the inference dominates: a same-session 20-key mixed
-    # A/B (round 13) read 24.4-25.0 s base vs 22.1 s with propagation
-    # off, with NO query slower and results bit-identical (the rule
-    # only ADDS redundant predicates; the full 138-key oracle sweep is
-    # re-verified under the off setting). Production keeps Spark's
-    # default ON: at multi-GB scans an inferred IsNotNull pushed into
-    # a parquet scan prunes real IO — the same overhead-vs-benefit
-    # scale crossover as the AQE advisory above.
-    # $SPARK_GRAFT_CONSTRAINT_PROP overrides directly ("true"/"false").
-    constraint_default = "false" if mode == "local" else "true"
+    defaults = mode_defaults(mode, n)
+    advisory_default = defaults["spark.sql.adaptive.advisoryPartitionSizeInBytes"]
+    shuffle_default = defaults["spark.sql.shuffle.partitions"]
+    constraint_default = defaults["spark.sql.constraintPropagation.enabled"]
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
@@ -135,7 +148,11 @@ def get_spark(
         # driver-side overhead — off in both modes; results and plans
         # are untouched (the wrapper only enriches error messages).
         # $SPARK_GRAFT_DF_DEBUGGING restores it for interactive
-        # debugging sessions.
+        # debugging sessions. PySpark reads this flag once, on the first
+        # DataFrame call, and caches it for the life of the process
+        # (pyspark.errors.utils.is_debugging_enabled), so the variable
+        # must be set before the session exists; changing the conf or
+        # the variable afterwards has no effect.
         .config(
             "spark.python.sql.dataFrameDebugging.enabled",
             os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),

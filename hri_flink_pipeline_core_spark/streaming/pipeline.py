@@ -21,8 +21,12 @@ Reference graph -> Spark mapping:
 
 3. counts ∪ notifications -> keyed Tracker -> terminal notifications
      => streaming_tracker (applyInPandasWithState) over the tagged
-     union, terminal output to the notification loopback sink and/or the
-     Mgmt-API HTTP sink.
+     union, one row per count event, terminal output to the notification
+     loopback sink and/or the Mgmt-API HTTP sink. Like the reference's
+     Tracker(par=N/4) (BaseValidationJob.scala:200-213), the query runs
+     with a quarter of the cluster's parallelism as state partitions:
+     its cost is a fixed Python-runner start per task per trigger, not
+     per-row work.
 
 Delivery semantics: Spark checkpointing gives exactly-once *state* and
 at-least-once *sink* writes. Three exactly-once options mirror the
@@ -49,6 +53,7 @@ keyed by batch_id, which makes replays overwrite rather than duplicate.
 from __future__ import annotations
 
 import os
+import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable, Optional
@@ -69,6 +74,20 @@ from .tracker_stream import streaming_tracker, tag_counts, tag_notifications
 # A sink is any callable taking the (already shaped) micro-batch DataFrame
 # and the micro-batch id.
 BatchSink = Callable[[DataFrame, int], None]
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+# serializes the set / start / restore of the session's shuffle
+# partition count around a tracker query start; a query started on the
+# same session from another thread inside that window would also see
+# the tracker's count
+_START_LOCK = threading.Lock()
+
+
+def tracker_partitions(spark: SparkSession) -> int:
+    """State partitions of the tracker query: a quarter of the cluster's
+    parallelism, at least one — the reference's Tracker(par=N/4)
+    (BaseValidationJob.scala:200-213)."""
+    return max(1, spark.sparkContext.defaultParallelism // 4)
 
 
 # --------------------------------------------------------------------------
@@ -245,7 +264,15 @@ class ValidationPipeline:
         trigger: Optional[dict] = None,
     ):
         """Query 3: counts ∪ notifications -> stateful tracker -> terminal
-        notification sink(s)."""
+        notification sink(s).
+
+        Each trigger runs one applyInPandasWithState task per state
+        partition, and each task pays a fixed Python-runner start, so the
+        query starts with ``tracker_partitions`` partitions instead of the
+        session's ``spark.sql.shuffle.partitions``. The session value is
+        changed only around ``start()``: the query clones the session
+        when it is created, and a restart from an existing checkpoint
+        keeps the partition count recorded in its offset log."""
         tagged = tag_counts(counts_stream, seq_col=None).unionByName(
             tag_notifications(notifications_stream)
         )
@@ -257,13 +284,20 @@ class ValidationPipeline:
             if self.notification_out_sink:
                 self.notification_out_sink(batch_df, batch_id)
 
-        q = (
+        writer = (
             terminal.writeStream.foreachBatch(emit)
             .option("checkpointLocation", self._checkpoint("tracker"))
             .outputMode("append")
             .trigger(**(trigger or {"processingTime": "1 second"}))
-            .start()
         )
+        spark = terminal.sparkSession
+        with _START_LOCK:
+            previous = spark.conf.get(_SHUFFLE_PARTITIONS)
+            spark.conf.set(_SHUFFLE_PARTITIONS, str(tracker_partitions(spark)))
+            try:
+                q = writer.start()
+            finally:
+                spark.conf.set(_SHUFFLE_PARTITIONS, previous)
         self.queries.append(q)
         return q
 

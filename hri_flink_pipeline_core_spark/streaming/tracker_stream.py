@@ -26,11 +26,12 @@ paths (operators/tracker.py ``BatchTrackerState``) — one implementation
 of the predicates, three execution harnesses.
 
 Scale notes: the shuffle into this operator is keyed by batchId, so
-state is O(#batches), not O(#records). Count events are folded with the
-vectorized numpy path (no per-row Python loop); at 100 TB the upstream
-``pre_aggregate_counts`` option shrinks the shuffle itself to
-O(#batches × #tasks) rows per micro-batch when exact ==-threshold
-arrival-order semantics are not required.
+state is O(#batches), not O(#records). Count events arrive one row per
+record and are folded with the vectorized numpy path (no per-row Python
+loop). What a trigger costs is set by its task count, not its rows: each
+state partition is one task that pays a fixed Python-runner start, which
+is why the pipeline starts this query with a quarter of the cluster's
+parallelism (streaming/pipeline.py ``tracker_partitions``).
 """
 
 from __future__ import annotations

@@ -32,7 +32,15 @@ def test_validation_uses_broadcast_hash_join(spark, sf001):
 def test_filter_pushdown_reaches_scan(spark, sf001):
     df = entry.q_filter_orders(spark, sf001)
     plan = plan_of(df)
-    assert "PushedFilters: [IsNotNull(o_orderstatus), EqualTo(o_orderstatus,F)]" in plan
+    # the inferred IsNotNull comes from Catalyst constraint propagation,
+    # which local mode turns off (session.mode_defaults)
+    propagation = spark.conf.get("spark.sql.constraintPropagation.enabled")
+    pushed = (
+        "IsNotNull(o_orderstatus), EqualTo(o_orderstatus,F)"
+        if propagation == "true"
+        else "EqualTo(o_orderstatus,F)"
+    )
+    assert f"PushedFilters: [{pushed}]" in plan
 
 
 def test_column_pruning_reaches_scan(spark, sf001):

@@ -11,8 +11,6 @@ deadlines are disabled for the same reason.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -156,8 +154,6 @@ def test_pagerank_matches_python_reference(spark, edges):
     """pagerank vs an independent pure-Python implementation using the
     SAME quantization contract (floor(x*q+0.5) integer sums) — checks the
     join/agg plumbing, dangling-node handling, and determinism."""
-    import os
-
     from hri_flink_pipeline_core_spark.operators.graph import pagerank
 
     # feed the RAW multi-edge list: every shape must dedupe (src,dst)
@@ -167,8 +163,10 @@ def test_pagerank_matches_python_reference(spark, edges):
     es = sorted(set(raw))
     got_by_shape = {}
     for shape in ("legacy", "flat", "adj"):
-        os.environ["SPARK_GRAFT_PAGERANK_SHAPE"] = shape
-        try:
+        # hypothesis reruns the body per example, so the env change is
+        # scoped to a context rather than the function-scoped fixture
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setenv("SPARK_GRAFT_PAGERANK_SHAPE", shape)
             got_by_shape[shape] = {
                 r["node"]: r["pagerank"]
                 for r in pagerank(
@@ -176,8 +174,6 @@ def test_pagerank_matches_python_reference(spark, edges):
                     iterations=2,
                 ).collect()
             }
-        finally:
-            os.environ.pop("SPARK_GRAFT_PAGERANK_SHAPE", None)
     got = got_by_shape["adj"]
     assert got_by_shape["legacy"] == got_by_shape["flat"] == got
 
@@ -197,13 +193,11 @@ def test_pagerank_matches_python_reference(spark, edges):
     assert got == pr
 
 
-def test_pagerank_null_endpoint_edges_one_contract(spark):
+def test_pagerank_null_endpoint_edges_one_contract(spark, monkeypatch):
     """ADVICE r11: all three shapes must share ONE NULL contract — an
     edge with a NULL src or dst contributes nothing (no NULL node in the
     output, no out-degree inflation of real nodes). Before round 12 the
     legacy/flat shapes kept NULL endpoints while adj filtered them."""
-    import os
-
     from hri_flink_pipeline_core_spark.operators.graph import pagerank
 
     clean = [(1, 2), (2, 3), (3, 1)]
@@ -215,17 +209,14 @@ def test_pagerank_null_endpoint_edges_one_contract(spark):
         ).collect()
     }
     for shape in ("legacy", "flat", "adj"):
-        os.environ["SPARK_GRAFT_PAGERANK_SHAPE"] = shape
-        try:
-            got = {
-                r["node"]: r["pagerank"]
-                for r in pagerank(
-                    spark.createDataFrame(dirty, "src int, dst int"),
-                    iterations=2,
-                ).collect()
-            }
-        finally:
-            os.environ.pop("SPARK_GRAFT_PAGERANK_SHAPE", None)
+        monkeypatch.setenv("SPARK_GRAFT_PAGERANK_SHAPE", shape)
+        got = {
+            r["node"]: r["pagerank"]
+            for r in pagerank(
+                spark.createDataFrame(dirty, "src int, dst int"),
+                iterations=2,
+            ).collect()
+        }
         assert got == expect, shape
 
 
@@ -583,18 +574,16 @@ def test_bpe_train_matches_python_reference(spark, texts):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     expected = _bpe_train_python(texts, 6)
     for budget in ("65536", "0"):
-        os.environ["SPARK_GRAFT_BPE_LOCAL_MAX_WORDS"] = budget
-        try:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setenv("SPARK_GRAFT_BPE_LOCAL_MAX_WORDS", budget)
             got = [
                 (r.merge_idx, r.left, r.right, r.merged, r.pair_count)
                 for r in bpe_train(df, n_merges=6).orderBy("merge_idx").collect()
             ]
-        finally:
-            os.environ.pop("SPARK_GRAFT_BPE_LOCAL_MAX_WORDS", None)
         assert got == expected, f"budget={budget}"
 
 
-def test_bpe_train_regex_special_symbols(spark):
+def test_bpe_train_regex_special_symbols(spark, monkeypatch):
     """The Java Pattern.quote edge cases the hypothesis alphabet (abc )
     never reaches: symbols containing backslash-E (terminates a naive
     \\Q..\\E quote early — bpe_train splices \\E\\\\E\\Q exactly like
@@ -612,14 +601,11 @@ def test_bpe_train_regex_special_symbols(spark):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     expected = _bpe_train_python(texts, 8)
     for budget in ("65536", "0"):
-        os.environ["SPARK_GRAFT_BPE_LOCAL_MAX_WORDS"] = budget
-        try:
-            got = [
-                (r.merge_idx, r.left, r.right, r.merged, r.pair_count)
-                for r in bpe_train(df, n_merges=8).orderBy("merge_idx").collect()
-            ]
-        finally:
-            os.environ.pop("SPARK_GRAFT_BPE_LOCAL_MAX_WORDS", None)
+        monkeypatch.setenv("SPARK_GRAFT_BPE_LOCAL_MAX_WORDS", budget)
+        got = [
+            (r.merge_idx, r.left, r.right, r.merged, r.pair_count)
+            for r in bpe_train(df, n_merges=8).orderBy("merge_idx").collect()
+        ]
         assert got == expected, f"budget={budget}"
 
 

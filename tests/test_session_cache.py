@@ -63,6 +63,15 @@ def test_get_spark_local_mode_constraint_propagation(spark):
     )
 
 
+def test_mode_defaults_constraint_propagation():
+    """Production keeps Spark's constraint propagation on (inferred
+    IsNotNull pushdowns prune real IO at data scale); local mode turns
+    it off."""
+    key = "spark.sql.constraintPropagation.enabled"
+    assert S.mode_defaults("production", 32)[key] == "true"
+    assert S.mode_defaults("local", 32)[key] == "false"
+
+
 def test_get_spark_dataframe_debugging_off(spark):
     """PySpark's per-DataFrame-op call-site capture (error-message
     enrichment) is disabled: ~3 py4j round-trips + a Python stack walk

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from hri_flink_pipeline_core_spark.operators.validation import json_validator
 from hri_flink_pipeline_core_spark.schemas import (
     BATCH_NOTIFICATION_SCHEMA,
+    COUNT_EVENT_SCHEMA,
     HRI_RECORD_SCHEMA,
     Status,
 )
@@ -35,6 +36,7 @@ from hri_flink_pipeline_core_spark.streaming.tracker_stream import (
     tag_counts,
     tag_notifications,
 )
+from tests.streams import drain
 
 TOPIC = "ingest.t1.di.in"
 
@@ -98,7 +100,7 @@ def test_streaming_tracker_threshold_and_overflow(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 11)
 
     by_batch = {r.batchId: r for r in out_rows}
     assert set(by_batch) == {"fail-b", "over-b"}
@@ -330,7 +332,7 @@ def test_tracker_state_survives_restart_at_most_once(spark, tmp_path):
         tag_counts(counts).withColumn("seq", F.lit(10).cast("long"))
     ).write.mode("overwrite").parquet(in_dir)
 
-    def run_once():
+    def run_once(rows):
         stream = read_table_stream(spark, in_dir, TRACKER_INPUT_SCHEMA)
         q = (
             streaming_tracker(stream, timeout_ms=300_000)
@@ -340,9 +342,9 @@ def test_tracker_state_survives_restart_at_most_once(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        drain(q, rows)
 
-    run_once()
+    run_once(4)
     assert len(out_rows) == 1
     assert out_rows[0].status == Status.FAILED  # overflow fail
 
@@ -354,5 +356,80 @@ def test_tracker_state_survives_restart_at_most_once(spark, tmp_path):
     ).withColumn("seq", F.lit(20).cast("long"))
     late.write.mode("append").parquet(in_dir)
 
-    run_once()
+    run_once(1)
     assert len(out_rows) == 1  # no duplicate terminal after restart
+
+
+def test_tracker_runs_at_quarter_parallelism(spark, tmp_path, monkeypatch):
+    """The tracker query starts with max(1, defaultParallelism // 4)
+    state partitions (the reference's Tracker(par=N/4)) without changing
+    the session's shuffle partitions, and a restart from a checkpoint
+    first written with 8 partitions keeps 8 and still emits at most one
+    terminal notification per batch."""
+    from hri_flink_pipeline_core_spark.streaming import pipeline as pipeline_mod
+
+    notif_dir = str(tmp_path / "notif")
+    spark.createDataFrame(
+        [notif_row("b1", expected=2), notif_row("b2", expected=10, threshold=2)],
+        BATCH_NOTIFICATION_SCHEMA,
+    ).withColumn("offset", F.lit(0).cast("long")).write.parquet(notif_dir)
+    notif_schema = spark.read.parquet(notif_dir).schema
+
+    def write_counts(counts_dir, rows):
+        spark.createDataFrame(rows, COUNT_EVENT_SCHEMA).write.mode(
+            "append"
+        ).parquet(counts_dir)
+
+    def run(workdir, counts_dir, out_rows, rows):
+        """One availableNow tracker drain of ``rows`` new input rows;
+        returns its state partitions."""
+        pipe = ValidationPipeline(
+            spark,
+            workdir=workdir,
+            notification_out_sink=lambda df, _b: out_rows.extend(df.collect()),
+        )
+        try:
+            q = pipe.start_tracker(
+                read_table_stream(spark, counts_dir, COUNT_EVENT_SCHEMA),
+                read_table_stream(spark, notif_dir, notif_schema),
+                trigger={"availableNow": True},
+            )
+            drain(q, rows)
+        finally:
+            pipe.stop()
+        ops = [
+            json.loads(p.json)["stateOperators"][0]["numShufflePartitions"]
+            for p in q.recentProgress
+        ]
+        assert len(set(ops)) == 1, ops
+        return ops[0]
+
+    # b1 overflows (3 > 2); b2 has 1 of its 2 threshold invalids
+    first = [("b1", True)] * 3 + [("b2", False)]
+    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
+
+    # fresh checkpoint: a quarter of the cluster's parallelism
+    fresh_rows = []
+    fresh_counts = str(tmp_path / "fresh_counts")
+    write_counts(fresh_counts, first)
+    want = max(1, spark.sparkContext.defaultParallelism // 4)
+    assert run(str(tmp_path / "fresh"), fresh_counts, fresh_rows, 6) == want
+    assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_before
+    assert [(r.batchId, r.status) for r in fresh_rows] == [("b1", Status.FAILED)]
+
+    # a checkpoint first written with 8 partitions keeps them on restart
+    rows = []
+    counts = str(tmp_path / "counts")
+    workdir = str(tmp_path / "pipe")
+    write_counts(counts, first)
+    with monkeypatch.context() as m:
+        m.setattr(pipeline_mod, "tracker_partitions", lambda _spark: 8)
+        assert run(workdir, counts, rows, 6) == 8
+    # late count for finished b1; b2 reaches its threshold
+    write_counts(counts, [("b1", False), ("b2", False)])
+    assert run(workdir, counts, rows, 2) == 8
+    assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_before
+    assert sorted((r.batchId, r.status) for r in rows) == [
+        ("b1", Status.FAILED),
+        ("b2", Status.FAILED),
+    ]

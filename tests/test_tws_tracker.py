@@ -34,6 +34,7 @@ from hri_flink_pipeline_core_spark.streaming.tws_tracker import (
     streaming_tracker_tws,
     tws_runtime_available,
 )
+from tests.streams import drain
 
 TOPIC = "ingest.t1.di.in"
 
@@ -327,6 +328,6 @@ def test_tracker_end_to_end_best_runtime(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 6)
     assert [r.status for r in out_rows] == [Status.FAILED]
     assert "invalidThreshold: 5" in out_rows[0].failureMessage
